@@ -14,11 +14,12 @@ import graft.ckpt.{CheckpointStore, EphemeralStore}
 /**
  * Pinned dedup configuration (FIXTURES.md §1): shingle w=5, MinHash 128
  * perms = 32 bands × 4 rows, SimHash 64 bits, Jaccard τ=0.8, Hamming
- * ≤3/64.
+ * ≤3/64. The MinHash signature length is always bands·rows (the
+ * reference requires the same, `lsh.go:124-127`), so it is not a
+ * separate knob.
  */
 case class DedupConfig(
   shingleW: Int = 5,
-  minhashPerms: Int = 128,
   bands: Int = 32,
   rows: Int = 4,
   // Manku et al. '07 family: `simhashTables` bit-rotations of the
@@ -78,11 +79,7 @@ case class DedupConfig(
   // pruning set; 32·64 = 2048 partitions keeps per-partition files
   // large at web scale while a 100-doc query batch touches ≲ 5%.
   bandBuckets: Int = 64,
-  stopWords: Seq[String] = Nil) {
-  require(minhashPerms == bands * rows,
-    s"signature length $minhashPerms must equal bands*rows (${bands * rows}); " +
-      "reference panics likewise, /root/reference/lsh.go:124-127")
-}
+  stopWords: Seq[String] = Nil)
 
 /**
  * End-to-end near-duplicate detection + clustering pipeline (the north
@@ -243,9 +240,11 @@ object DedupPipeline {
     (cur, None)
   }
 
-  /** Stage 2a — exact-dup edges + one representative per distinct text.
-    * Returns (edges(a, b), reps). Reference has no exact stage; it falls
-    * out of dedup-at-scale practice (identical pages collapse before any
+  /** Stage 2a — exact-dup edges: one (a, b) per duplicate copy b, where
+    * a is the smallest doc_id with the same normalised text;
+    * [[exactDupReps]] then keeps one representative per distinct text.
+    * Reference has no exact stage; it falls out of
+    * dedup-at-scale practice (identical pages collapse before any
     * signature work).
     *
     * Bandwidth shape: the canon window runs over a SLIM
@@ -254,34 +253,10 @@ object DedupPipeline {
     * ~4-6 KB/doc; the fat variant moved ~2 GB at 375k docs and this
     * host's memory bandwidth is both the 32-thread bottleneck and the
     * main external-noise coupling). Representatives are then selected
-    * from the (cached) extracted frame by a semi-join on the canon-id
+    * from the (cached) extracted frame by an anti-join on the copy-id
     * set — broadcast when the set is small enough (corpus-count guard),
     * shuffle otherwise; either way the fat columns never ride the
     * text_hash exchange. */
-  def exactDedup(extracted: DataFrame,
-                 cfg: DedupConfig = DedupConfig()): (DataFrame, DataFrame) = {
-    // persisted for the same reason run() wraps its edge stage in
-    // shared(): the count below, the reps anti-join build and the
-    // caller's own consumption would otherwise each re-execute the
-    // text_hash window (measured 2-3 full executions per call through
-    // this convenience API). Slim rows (16 B/dup); stays registered
-    // until the session sweeps caches (SparkEntry.releaseCaches /
-    // catalog.clearCache) — it cannot be released here because both
-    // returned frames read it lazily.
-    val edges = exactDupEdges(extracted)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the broadcast decision MUST come from the measured dup count
-    // (exactDupReps' own contract): a web corpus's exact-mirror
-    // population is in the billions — an unconditional broadcast hint
-    // builds it on the driver and OOMs. One slim count job is the
-    // price of the convenience API; run() measures the same count
-    // anyway — and it doubles as the cache materialiser.
-    val nDups = edges.count()
-    (edges, exactDupReps(extracted, edges,
-      broadcastDups = nDups <= cfg.broadcastIdLimit))
-  }
-
-  /** Exact-dup edges alone (the slim canon window). */
   def exactDupEdges(extracted: DataFrame): DataFrame = {
     import extracted.sparkSession.implicits._
     val w = org.apache.spark.sql.expressions.Window.partitionBy("text_hash")
@@ -348,14 +323,15 @@ object DedupPipeline {
     // 10^12-doc operating point the df>minDf shingle population is
     // 10^9-10^10 rows, which stays on the executors.
     // three PRIMITIVE-column branches into ONE aggregation (optimization
-    // round): the previous combined statsEntries kernel materialised an
-    // InternalRow object per entry (~66M tiny allocations per bench
-    // pass, the stats stage's dominant CPU after the exchange). Each
-    // branch explodes a primitive long column (tf.term via
-    // GetArrayStructFields, shingles directly) with the kind as a
-    // CONSTANT — all codegen, zero per-entry objects; the union feeds
-    // the same single (kind, id) hash aggregation, so the stage still
-    // runs one job / one shuffle, and the df multiset is identical.
+    // round): the previous combined per-doc entry-array kernel
+    // materialised an InternalRow object per entry (~66M tiny
+    // allocations per bench pass, the stats stage's dominant CPU after
+    // the exchange). Each branch explodes a primitive long column
+    // (tf.term via GetArrayStructFields, shingles directly) with the
+    // kind as a CONSTANT — all codegen, zero per-entry objects; the
+    // union feeds the same single (kind, id) hash aggregation, so the
+    // stage still runs one job / one shuffle, and the df multiset is
+    // identical.
     val slim = tfd
       .select(lit(0).as("kind"), explode(col("tf.term")).as("id"))
       .unionByName(tfd.select(lit(0).as("kind"), lit(-1L).as("id")))
@@ -418,8 +394,9 @@ object DedupPipeline {
     } finally slim.unpersist(blocking = false)
   }
 
-  /** Apply fitted stats: MinHash128 over the (df-conditioned) shingle
-    * set; SimHash64 over the tf-idf-weighted hashed term vector.
+  /** Apply fitted stats: MinHash over the (df-conditioned) shingle
+    * set, one slot per band row (bands·rows — 128 in the pinned 32×4
+    * config); SimHash64 over the tf-idf-weighted hashed term vector.
     * `keepTf` retains the tf column — the incremental index stores it
     * so a stats [[graft.ops.IncrementalIndex.refit]] can re-signature
     * every batch without the raw text. */
@@ -429,13 +406,14 @@ object DedupPipeline {
       if (stats.hotShingles.isEmpty) col("shingles")
       else HashFunctions.filterNotIn(col("shingles"), stats.hotShingles)
     val signed = tfd
-      .withColumn("minhash", HashFunctions.minhash128(bandShingles))
+      .withColumn("minhash",
+        HashFunctions.minhashK(bandShingles, cfg.bands * cfg.rows))
       .withColumn("simhash",
         HashFunctions.simhash64idf(col("tf"), stats.idfTerms, stats.idfVals))
     if (keepTf) signed else signed.drop("tf")
   }
 
-  /** Stage 2b — signatures over representatives: MinHash128 over the
+  /** Stage 2b — signatures over representatives: MinHash over the
     * shingle set; SimHash64 over the tf-idf–weighted hashed term vector
     * (reference pipeline: TF-IDF → sign random projection,
     * `/root/reference/example_test.go:30-45` + `hashing.go:49-62`). */
@@ -468,10 +446,6 @@ object DedupPipeline {
     Lsh.simhashNeighborEdges(sigs, "doc_id", "simhash",
       cfg.simhashTables, cfg.chainWidth, cfg.maxHamming)
 
-  /** Stage 4 — exact verification of candidate pairs
-    * (`/root/reference/index.go:198-255` semantics: true-metric check on
-    * retrieved candidates): Jaccard over shingle sets ≥ τ, OR Hamming
-    * over SimHash ≤ maxHamming bits. */
   /** Semi-filter `payload` (keyed `doc_id`) to the member ids of the
     * candidate pairs `cands` (columns `a`, `b`) — broadcast-hinted when
     * `broadcast` says the MEASURED pair count fits
@@ -495,6 +469,10 @@ object DedupPipeline {
   // multi-billion-id member set for every direct caller of the
   // convenience surface, the unguarded-broadcast driver OOM this file's
   // guards exist to prevent
+  /** Stage 4 — exact verification of candidate pairs
+    * (reference `index.go:198-255` semantics: true-metric check on
+    * retrieved candidates): Jaccard over shingle sets ≥ τ, OR Hamming
+    * over SimHash ≤ maxHamming bits. */
   def verifyPairs(cands: DataFrame, sigs: DataFrame, cfg: DedupConfig,
                   broadcastMembers: Boolean): DataFrame = {
     import cands.sparkSession.implicits._

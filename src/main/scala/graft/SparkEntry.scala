@@ -336,10 +336,7 @@ object SparkEntry {
 
     "q_simhash" -> ((s, dir) => {
       val cfg = DedupConfig()
-      // direct edges+reps instead of the counting exactDedup()
-      // convenience (optimization round): the 6-doc fixture trivially
-      // fits the broadcast limit, so the measured-count job was pure
-      // serial floor; results identical (broadcast vs shuffle anti-join)
+      // the 6-doc fixture trivially fits the broadcast limit
       val ext = DedupPipeline.extract(fixturePages(s), cfg)
       val reps = DedupPipeline.exactDupReps(ext,
         DedupPipeline.exactDupEdges(ext), broadcastDups = true)
@@ -384,8 +381,7 @@ object SparkEntry {
       val cfg = DedupConfig()
       val (pages, truth) = syntheticTruth(s)
       val ext = DedupPipeline.extract(pages, cfg)
-      // fixture-sized: skip the measured-count job of exactDedup()
-      // (broadcast anti-join is result-identical — see q_simhash note)
+      // fixture-sized: fits the broadcast limit
       val reps = DedupPipeline.exactDupReps(ext,
         DedupPipeline.exactDupEdges(ext), broadcastDups = true)
       val sigs = DedupPipeline.signatures(reps, cfg)

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
  * `members` holds at most `cap` entries and `total` counts every row
  * seen (a long increment, never buffered).
  *
- * This replaces `slice(collect_list(...), 1, cap)` in the LSH /
- * anchor bucket aggregations (Lsh.candidatePairs). The slice variant
+ * This replaces `slice(collect_list(...), 1, cap)` in the LSH bucket
+ * aggregation of `TrainingDataOps.lshTopK`. The slice variant
  * bounds the OUTPUT but not the AGGREGATION BUFFER: a corpus-wide
  * boilerplate key shared by 10^7+ documents at web scale accumulates
  * every member on one reducer before the slice runs — an OOM, and the
@@ -35,13 +35,12 @@ import org.apache.spark.sql.types._
  * survived in every band, so a member dropped from one hot bucket was
  * dropped from all of them at once, defeating the independent-band
  * recall the banding math assumes). Callers choose the decorrelation
- * through the skey: a per-band salted hash (lshTopK) gives each band
- * an independent survivor set; a content sort key (candidatePairs)
- * keeps near-identical members together so chains stay connected.
+ * through the skey: lshTopK's per-band salted hash gives each band an
+ * independent survivor set.
  * Under-cap buckets never pay the heap (plain appends, heapify runs
  * at most once per buffer, replacement is O(log cap) and only on
- * smaller-than-max rows). Output array order is heap order — PairGen
- * re-sorts by skey, and set-consumers explode unordered.
+ * smaller-than-max rows). Output array order is heap order — the
+ * consumer explodes it unordered.
  */
 case class CappedCollect(skeyExpr: Expression, idExpr: Expression, cap: Int,
                          mutableAggBufferOffset: Int = 0,

@@ -76,50 +76,6 @@ object HashKernels {
     z ^ (z >>> 31)
   }
 
-  /** In-place sort of parallel long arrays by (key, val) — primitive
-    * quicksort + insertion tail, no boxed comparators (a boxed Ordering
-    * in the bucket pair generator dominated skewed-reducer CPU in
-    * stack samples). */
-  def sortByKeyThenVal(keys: Array[Long], vals: Array[Long]): Unit = {
-    def less(i: Int, j: Int): Boolean =
-      keys(i) < keys(j) || (keys(i) == keys(j) && vals(i) < vals(j))
-    def swap(i: Int, j: Int): Unit = {
-      val k = keys(i); keys(i) = keys(j); keys(j) = k
-      val v = vals(i); vals(i) = vals(j); vals(j) = v
-    }
-    def sort(lo: Int, hi: Int): Unit = {
-      if (hi - lo < 16) {
-        var i = lo + 1
-        while (i <= hi) {
-          var j = i
-          while (j > lo && less(j, j - 1)) { swap(j, j - 1); j -= 1 }
-          i += 1
-        }
-      } else {
-        val mid = lo + (hi - lo) / 2
-        if (less(mid, lo)) swap(lo, mid)
-        if (less(hi, lo)) swap(lo, hi)
-        if (less(hi, mid)) swap(mid, hi)
-        swap(mid, hi - 1) // median-of-3 pivot parked at hi-1
-        val p = hi - 1
-        var i = lo
-        var j = hi - 1
-        var done = false
-        while (!done) {
-          i += 1
-          while (less(i, p)) i += 1
-          j -= 1
-          while (j > lo && less(p, j)) j -= 1
-          if (i >= j) done = true else swap(i, j)
-        }
-        swap(i, hi - 1)
-        sort(lo, i - 1)
-        sort(i + 1, hi)
-      }
-    }
-    if (keys.length > 1) sort(0, keys.length - 1)
-  }
-
   // ---------------------------------------------------------------- minhash
 
   /**
@@ -162,13 +118,6 @@ object HashKernels {
   /** ArrayData adapter for codegen. */
   def minhashArray(shingles: ArrayData, k: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(minhash(shingles.toLongArray(), k))
-
-  /** Estimated Jaccard from two equal-length signatures. */
-  def minhashSim(a: Array[Long], b: Array[Long]): Double = {
-    var eq = 0; var i = 0
-    while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / a.length
-  }
 
   // ------------------------------------------------- per-doc TF and shingles
 
@@ -242,30 +191,6 @@ object HashKernels {
       i += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  /** Combined corpus-stats entries for the one-job df aggregation:
-    * (kind 0, term) per tf entry, one (kind 0, −1) doc sentinel, and
-    * (kind 1, shingle) per shingle — built in a single pass so the stats
-    * job needs no interpreted higher-order transforms. */
-  def statsEntries(tf: ArrayData, shingles: ArrayData): ArrayData = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val nt = tf.numElements()
-    val ns = shingles.numElements()
-    val out = new Array[Any](nt + 1 + ns)
-    var i = 0
-    while (i < nt) {
-      out(i) = InternalRow(0, tf.getStruct(i, 2).getLong(0))
-      i += 1
-    }
-    out(nt) = InternalRow(0, -1L)
-    i = 0
-    while (i < ns) {
-      out(nt + 1 + i) = InternalRow(1, shingles.getLong(i))
-      i += 1
-    }
-    new GenericArrayData(out)
   }
 
   // -------------------------------------------------------------- winnowing
@@ -617,14 +542,6 @@ object HashKernels {
       i += 1
     }
     UnsafeArrayData.fromPrimitiveArray(acc)
-  }
-
-  /** Fraction of equal bit positions between two packed signatures
-    * (`/root/reference/comparisons.go:70-92` Hamming similarity). */
-  def hammingSim(a: Array[Long], b: Array[Long], bits: Int): Double = {
-    var diff = 0; var i = 0
-    while (i < a.length) { diff += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1 }
-    1.0 - diff.toDouble / bits
   }
 
   private def pack(acc: Array[Double]): Array[Long] = {

@@ -236,12 +236,12 @@ object Lsh {
 
   /**
    * Candidate pairs from bucket-entry rows. Returns distinct (a, b),
-   * a < b. Single-pass design: ONE shuffle (groupBy band,key), bucket
-   * members collected sorted by `skey`, pairs emitted by the codegen'd
-   * [[graft.hash.PairGen]] expression — all-pairs for buckets up to
-   * `maxBucket`, skey-ordered chain pairs beyond (skew bound). The
-   * earlier windows+self-joins formulation scanned the bucket relation
-   * four times; this scans it once.
+   * a < b. Single-pass design: ONE shuffle (repartition by band, key),
+   * one partition sort by (band, key, skey, id), and the streaming
+   * [[PairStream]] iterator walking each bucket's members in skey order
+   * — all-pairs for buckets up to `maxBucket`, skey-ordered chain pairs
+   * beyond (skew bound). No bucket's member list is collected: the
+   * stream holds at most O(maxBucket + chainWidth) members.
    *
    * Chain pairing IS salted sub-bucketing: splitting a hot key into
    * ceil(n/maxBucket) salt groups in skey order plus bridge edges
@@ -250,19 +250,17 @@ object Lsh {
    * bridge join. AQE skew-join mitigation stays enabled as the backstop
    * (north rule).
    *
-   * `hardCap` bounds member collection on pathological mega-buckets
-   * (boilerplate shared by millions of pages) via [[graft.hash
-   * .CappedCollect]]: the aggregation BUFFER itself is capped at every
-   * partial- and final-agg site (a slice over collect_list would bound
-   * only the output and OOM the reducer at web scale), while the exact
-   * `total` keeps the drop observable. Members beyond the cap are
-   * dropped from pairing — such pages still dedup via the exact-hash
-   * stage.
+   * Hot keys: every row of one (band, key) lands on ONE reducer — a
+   * mega-bucket (boilerplate shared by millions of pages) is a single
+   * sequential scan there, in constant memory. `hardCap` bounds how
+   * many of its members take part in pairing: the first `hardCap` in
+   * (skey, id) order; the rest are still counted but pair with nobody
+   * (such pages still dedup via the exact-hash stage).
    *
    * `dropAbove` drops ENTIRE buckets whose true member count exceeds
    * it (corpus-wide boilerplate keys — their pairs would connect
-   * unrelated documents): an exact filter on the aggregate's total,
-   * costing no separate counting pass.
+   * unrelated documents): the stream counts the whole bucket before
+   * releasing its pairs, so no separate counting pass is needed.
    */
   def candidatePairs(buckets: DataFrame, docId: String,
                      maxBucket: Int, chainWidth: Int,

@@ -3,7 +3,7 @@ package graft.lsh
 /**
  * Streaming per-bucket candidate-pair generator over a SORTED bucket-row
  * iterator ((band, key, skey, id), ordered by (band, key, skey, id)) —
- * the optimization-round replacement for the collect-then-PairGen
+ * the optimization-round replacement for the collect-then-pair
  * aggregation in [[Lsh.candidatePairs]].
  *
  * Why: the aggregation formulation pushed every bucket row through an
@@ -17,8 +17,9 @@ package graft.lsh
  * (already required to order members by skey) and emits pairs with
  * O(maxBucket + chainWidth) state, no per-group objects.
  *
- * SEMANTICS ARE IDENTICAL to capped_collect + PairGen (asserted by
- * Round6PairStreamSpec A/B on adversarial bucket shapes):
+ * SEMANTICS ARE IDENTICAL to capped_collect + the former per-bucket
+ * pair expression (asserted by Round6PairStreamSpec A/B on adversarial
+ * bucket shapes):
  *  - participants = the first `hardCap` members in (skey, id) order
  *    (sorted input ⇒ exactly CappedCollect's "cap smallest" survivors);
  *  - ≤ maxBucket participants → all pairs; more → chain pairs in skey
@@ -101,7 +102,7 @@ private[lsh] final class PairStream(
 
   private def chainEmit(id: Long): Unit = {
     // pair the new member with its previous ≤ chainWidth participants —
-    // the same pair set as PairGen's forward (i, i+d) walk
+    // the same pair set as a forward (i, i+d) walk over the bucket
     var d = 1
     while (d <= ringN) {
       emit(ringI(((ringPos - d) % chainWidth + chainWidth) % chainWidth), id)

@@ -229,9 +229,9 @@ object SuffixArrayStage {
     // Boilerplate anchors (a fingerprint shared by > hotAnchorDf docs is
     // a corpus-wide template sentence, not substring duplication — its
     // pairs would connect unrelated pages) are dropped INSIDE the bucket
-    // aggregation via candidatePairs' dropAbove: the capped-collect
-    // aggregate bounds every agg buffer at hotAnchorDf+1 members while
-    // counting the true df, so no separate anchor-cardinality counting
+    // scan via candidatePairs' dropAbove: the streaming pair generator
+    // counts each anchor bucket's true df and voids it past the bound,
+    // so no separate anchor-cardinality counting
     // shuffle + driver collect is needed (the previous shape paid a full
     // ~(docs × anchors/doc)-row shuffle just to pre-drop hot keys).
     // winnowCtx carries a content sort key per anchor (the 4 chars

@@ -10,6 +10,21 @@ import org.apache.spark.unsafe.types.UTF8String
 class HashKernelsSpec extends AnyFunSuite with SparkSpec {
   import SparkSpec._
 
+  /** Estimated Jaccard from two equal-length signatures. */
+  private def minhashSim(a: Array[Long], b: Array[Long]): Double = {
+    var eq = 0; var i = 0
+    while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
+    eq.toDouble / a.length
+  }
+
+  /** Fraction of equal bit positions between two packed signatures
+    * (reference `comparisons.go:70-92` Hamming similarity). */
+  private def hammingSim(a: Array[Long], b: Array[Long], bits: Int): Double = {
+    var diff = 0; var i = 0
+    while (i < a.length) { diff += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1 }
+    1.0 - diff.toDouble / bits
+  }
+
   test("murmur3_32 seed 0 matches canonical test vectors (vectorisers.go:261)") {
     def h(s: String): Long =
       HashKernels.murmur3Unsigned(UTF8String.fromString(s))
@@ -49,7 +64,7 @@ class HashKernelsSpec extends AnyFunSuite with SparkSpec {
       val inter = aSet.toSet.intersect(bSet.toSet).size.toDouble
       val union = aSet.toSet.union(bSet.toSet).size.toDouble
       val exact = inter / union
-      val est = HashKernels.minhashSim(
+      val est = minhashSim(
         HashKernels.minhash(aSet, 128), HashKernels.minhash(bSet, 128))
       totalErr += math.abs(est - exact)
       assert(math.abs(est - exact) < 0.2, s"trial $t: est $est vs exact $exact")
@@ -57,12 +72,31 @@ class HashKernelsSpec extends AnyFunSuite with SparkSpec {
     assert(totalErr / trials < 0.05, s"avg err ${totalErr / trials}")
   }
 
+  test("minhash past 256 slots: the precomputed seeds' prefix is unchanged " +
+    "and later slots derive their seed on the fly") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val s = Array.fill(40)(rnd.nextLong())
+    val k300 = HashKernels.minhash(s, 300)
+    assert(k300.take(256).toSeq === HashKernels.minhash(s, 256).toSeq)
+    val seed299 = HashKernels.mix64(0x5eed0000L + 299)
+    assert(k300(299) === s.map(x => HashKernels.mix64(x ^ seed299)).min)
+    // an empty shingle set yields the seeds themselves
+    assert(HashKernels.minhash(Array.empty[Long], 300)(299) === seed299)
+    // the codegen'd expression takes the same path (SQL minhashk(x, k)
+    // and bands·rows > 256 both reach it)
+    val viaPlan = Seq(s).toDF("sh")
+      .select(HashFunctions.minhashK($"sh", 300).as("mh"))
+      .as[Seq[Long]].head()
+    assert(viaPlan === k300.toSeq)
+  }
+
   test("minhash identical sets -> identical signatures; disjoint -> low sim") {
     val a = Array(1L, 2L, 3L, 4L, 5L)
-    assert(HashKernels.minhashSim(
+    assert(minhashSim(
       HashKernels.minhash(a, 128), HashKernels.minhash(a.reverse, 128)) === 1.0)
     val b = Array(100L, 200L, 300L, 400L, 500L)
-    assert(HashKernels.minhashSim(
+    assert(minhashSim(
       HashKernels.minhash(a, 128), HashKernels.minhash(b, 128)) < 0.1)
   }
 
@@ -81,7 +115,7 @@ class HashKernelsSpec extends AnyFunSuite with SparkSpec {
       val ids = Array.tabulate(dim)(_.toLong)
       val sa = HashKernels.simhash(ids, a, bits)
       val sb = HashKernels.simhash(ids, b, bits)
-      val ham = HashKernels.hammingSim(sa, sb, bits)
+      val ham = hammingSim(sa, sb, bits)
       val cos = {
         val dot = a.zip(b).map { case (x, y) => x * y }.sum
         val na = math.sqrt(a.map(x => x * x).sum)
@@ -100,7 +134,7 @@ class HashKernelsSpec extends AnyFunSuite with SparkSpec {
     val ids = Array.tabulate(50)(_.toLong)
     val s1 = HashKernels.simhash(ids, a, 1024)
     val s2 = HashKernels.simhash(ids, a, 1024)
-    assert(HashKernels.hammingSim(s1, s2, 1024) === 1.0)
+    assert(hammingSim(s1, s2, 1024) === 1.0)
   }
 
   test("one-pass HashedTf / HashedShingles match the builtin formulations") {

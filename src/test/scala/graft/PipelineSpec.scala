@@ -29,6 +29,30 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(labels.forall(_._2 == 0L), "single component, min label 0")
   }
 
+  test("DedupConfig(bands = 64, rows = 4) signs bands·rows = 256 slots, " +
+    "so no band keys every doc alike") {
+    import spark.implicits._
+    val (pages, _) = SyntheticPages.generate(spark, 200)
+    val cfg = DedupConfig(bands = 64, rows = 4)
+    val sigs = DedupPipeline.signatures(
+      DedupPipeline.extract(pages.select("url", "text"), cfg), cfg).cache()
+    assert(sigs.select(size($"minhash")).distinct().as[Int].collect() ===
+      Array(256))
+    val nDocs = sigs.count()
+    // a signature shorter than bands·rows slices past its end in the
+    // high bands: every doc would hash the empty slice to one shared key
+    val keysPerBand = sigs
+      .select(explode(graft.lsh.Lsh.minhashBandKeys($"minhash", 64, 4))
+        .as("bk"))
+      .groupBy($"bk.band").agg(countDistinct($"bk.key").as("keys"))
+      .as[(Int, Long)].collect().toMap
+    assert(keysPerBand.keySet === (0 until 64).toSet)
+    keysPerBand.foreach { case (band, keys) =>
+      assert(keys > nDocs / 2, s"band $band: $keys keys for $nDocs docs")
+    }
+    sigs.unpersist()
+  }
+
   test("broadcast-guard fallbacks: shuffle-join paths match broadcast paths") {
     // at 10^12 docs the dup-id / candidate-member sets outgrow any
     // broadcast; the guarded fallback (planner-chosen shuffle join)

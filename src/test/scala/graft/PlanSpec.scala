@@ -45,8 +45,9 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val pages = spark.read.parquet(s"$dir/documents.parquet")
       .select(concat(lit("doc://"), col("doc_id")).as("url"), col("text"))
     val ext = DedupPipeline.extract(pages, DedupConfig())
-    val sigs = DedupPipeline.signatures(
-      DedupPipeline.exactDedup(ext)._2, DedupConfig())
+    val reps = DedupPipeline.exactDupReps(ext,
+      DedupPipeline.exactDupEdges(ext), broadcastDups = true)
+    val sigs = DedupPipeline.signatures(reps, DedupConfig())
     val cands = DedupPipeline.candidates(sigs, DedupConfig())
     val ver = DedupPipeline.verifyPairs(cands, sigs, DedupConfig(),
       broadcastMembers = true)

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class Round6PairStreamSpec extends AnyFunSuite with SparkSpec {
 
-  /** The pre-r06 formulation, verbatim (CappedCollect + PairGen are
-    * retained kernels — lshTopK still uses the capped aggregate). */
+  /** The pre-r06 formulation, verbatim (CappedCollect is still a main
+    * kernel — lshTopK uses the capped aggregate; PairGen lives in the
+    * test tree as this oracle). */
   private def legacyPairs(buckets: org.apache.spark.sql.DataFrame,
                           docId: String, maxBucket: Int, chainWidth: Int,
                           hardCap: Int, dropAbove: Int) = {
@@ -28,7 +29,7 @@ class Round6PairStreamSpec extends AnyFunSuite with SparkSpec {
       if (dropAbove == Int.MaxValue) grouped
       else grouped.filter($"m.total" <= dropAbove)
     kept
-      .select(explode(graft.hash.HashFunctions.pairGen(
+      .select(explode(graft.hash.PairGen.pairGen(
         $"m.members", maxBucket, chainWidth)).as("p"))
       .select($"p.a", $"p.b")
       .distinct()
@@ -75,6 +76,21 @@ class Round6PairStreamSpec extends AnyFunSuite with SparkSpec {
       assert(now === old,
         s"cfg=($maxBucket,$chainWidth,$hardCap,$dropAbove): " +
           s"only-new=${(now -- old).take(5)} only-old=${(old -- now).take(5)}")
+    }
+  }
+
+  test("sortByKeyThenVal: matches boxed reference sort (incl. duplicates)") {
+    var seed = 42L
+    def next(): Long = { seed = graft.hash.HashKernels.mix64(seed); seed }
+    (0 until 200).foreach { round =>
+      val n = 1 + (next() >>> 33).toInt % 300
+      // small key range forces duplicate keys -> val tiebreak exercised
+      val mod = if (round % 2 == 0) 7L else Long.MaxValue
+      val keys = Array.fill(n)(next() % mod)
+      val vals = Array.fill(n)(next() % 13L)
+      val expect = keys.zip(vals).sortBy(identity).toSeq
+      graft.hash.PairGen.sortByKeyThenVal(keys, vals)
+      assert(keys.zip(vals).toSeq === expect, s"round $round n=$n")
     }
   }
 
