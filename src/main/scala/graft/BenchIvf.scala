@@ -77,8 +77,12 @@ object BenchIvf {
     }
 
     def measure(nProbe: Int, prune: Boolean): (Double, Long, Long, Long) = {
-      val ix = new graft.ops.IvfIndex(spark, s"$base/ivf",
-        nCells = nCells, nProbe = nProbe, pruneScan = prune)
+      // pruneMaxFraction = 0.0 never attaches the partition filter
+      val ix =
+        if (prune) new graft.ops.IvfIndex(spark, s"$base/ivf",
+          nCells = nCells, nProbe = nProbe)
+        else new graft.ops.IvfIndex(spark, s"$base/ivf",
+          nCells = nCells, nProbe = nProbe, pruneMaxFraction = 0.0)
       // cold plan over the stored files each time. The LAZY frame, not
       // search(): search() snapshot-validates by cutting the plan at a
       // localCheckpoint, so its executedPlan is a LogicalRDD with NO
@@ -94,7 +98,7 @@ object BenchIvf {
       val (b, f) = scanStats(df.queryExecution.executedPlan)
       // the plan is spent (collected + scanned for metrics): release
       // its query pin so 17 measure() calls don't accrete 17 block sets
-      graft.ckpt.Checkpoints.free(pin)
+      pin.foreach(graft.ckpt.Checkpoints.free)
       (sec, b, f, n)
     }
 

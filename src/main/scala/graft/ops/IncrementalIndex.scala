@@ -32,6 +32,10 @@ import graft.DedupPipeline.CorpusStats
  * but its DOMAIN is the fixed pb range (bands·bandBuckets ≤ a few
  * thousand), not the corpus, so the collect is constant-bounded at any
  * index size.
+ *
+ * The stats' first fit, memo, crash-replayed refit, growth-triggered
+ * auto-refit and snapshot-validated search are
+ * [[graft.ckpt.FittedModel]]'s lifecycle.
  */
 class IncrementalIndex(spark: SparkSession, path: String,
                        cfg: DedupConfig = DedupConfig(),
@@ -60,50 +64,26 @@ class IncrementalIndex(spark: SparkSession, path: String,
     (band.cast("int") * cfg.bandBuckets +
       pmod(key, lit(cfg.bandBuckets.toLong)).cast("int")).cast("int")
 
-  private def statsPath = s"$path/stats"
-  // pending-refit marker: newly fitted stats land here FIRST; they are
-  // swapped into statsPath only after every batch has been
-  // re-signatured, so a crash mid-refit is always recoverable from the
-  // marker (see ensureRefitComplete)
-  private def statsNextPath = s"$path/stats.refit"
+  // `stats` holds the fitted corpus stats; a pending refit's stats land
+  // in the `stats.refit` marker first and are swapped into `stats` only
+  // after every batch has been re-signatured
+  private val stats = new graft.ckpt.FittedModel[CorpusStats](spark,
+      s"$path/stats", store, "doc_id", autoRefitGrowth)(
+    read = p => {
+      val r = spark.read.parquet(p).head()
+      CorpusStats(r.getLong(0), r.getSeq[Long](1).toArray,
+        r.getSeq[Double](2).toArray, r.getSeq[Long](3).toArray)
+    },
+    write = (st, p) => {
+      import spark.implicits._
+      Seq((st.n, st.idfTerms.toSeq, st.idfVals.toSeq, st.hotShingles.toSeq))
+        .toDF("n", "idf_terms", "idf_vals", "hot_shingles")
+        .write.mode("overwrite").parquet(p)
+    },
+    fitSize = st => Some(st.n),
+    reassign = resignature)
 
   def isEmpty: Boolean = store.isEmpty
-
-  private def loadStatsFrom(p: String): Option[CorpusStats] =
-    if (!Fs.exists(p, hconf)) None
-    else {
-      val r = spark.read.parquet(p).head()
-      Some(CorpusStats(r.getLong(0),
-        r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray,
-        r.getSeq[Long](3).toArray))
-    }
-
-  // stats memo keyed by the stats dir's FS stamp (mirrors IvfIndex's
-  // bookMemo): every put paid two parquet read+collect jobs (the
-  // signature fit lookup + the growth check) for a file that only
-  // changes on refit. The stamp re-read is FS metadata only (no Spark
-  // job); an in-process refit invalidates explicitly, a cross-process
-  // refit is picked up by the stamp change (same ~1 s granularity
-  // caveat as the search snapshot validation below).
-  private var statsMemo: Option[(Long, CorpusStats)] = None
-
-  private def loadStats(): Option[CorpusStats] =
-    Fs.modifiedMs(statsPath, hconf) match {
-      case None => statsMemo = None; None
-      case Some(st) => statsMemo match {
-        case Some((s, c)) if s == st => Some(c)
-        case _ => loadStatsFrom(statsPath).map { c =>
-          statsMemo = Some((st, c)); c
-        }
-      }
-    }
-
-  private def saveStatsTo(p: String, st: CorpusStats): Unit = {
-    import spark.implicits._
-    Seq((st.n, st.idfTerms.toSeq, st.idfVals.toSeq, st.hotShingles.toSeq))
-      .toDF("n", "idf_terms", "idf_vals", "hot_shingles")
-      .write.mode("overwrite").parquet(p)
-  }
 
   /** Signature a batch of pages (url, text) with the PERSISTED corpus
     * stats (fitted and saved on the first call). The hashed-tf column
@@ -134,27 +114,8 @@ class IncrementalIndex(spark: SparkSession, path: String,
         when(col("url").isNull, lit(null).cast("long"))
           .otherwise(xxhash64(col("url")))))
     val tfd = DedupPipeline.withTf(ext, cfg)
-    val stats = loadStats().getOrElse {
-      // first-fit check + publish runs UNDER the store's writer lease
-      // (double-checked): two concurrent first puts would otherwise
-      // each fit, and the later publish would overwrite the earlier
-      // stats while the earlier writer's rows — signed under its own
-      // fit — still commit, leaving persisted stats inconsistent with
-      // stored signatures. The loser of the lease fails loudly (the
-      // single-writer contract) instead of silently splitting the fit.
-      store.withLease {
-        loadStats().getOrElse {
-          val st = DedupPipeline.fitCorpusStats(tfd, cfg)
-          // atomic first-fit publish: a crash mid-parquet-write must not
-          // leave a partial stats dir that loadStats would silently read
-          // (the store is still empty here, so losing the fit loses
-          // nothing — the next put simply re-fits)
-          Fs.publishByRename(statsPath, hconf)(saveStatsTo(_, st))
-          st
-        }
-      }
-    }
-    DedupPipeline.applySignatures(tfd, stats, cfg, keepTf = true)
+    val st = stats.fitFirst(DedupPipeline.fitCorpusStats(tfd, cfg))
+    DedupPipeline.applySignatures(tfd, st, cfg, keepTf = true)
       .select(col("url"), col("doc_id"), col("minhash"), col("simhash"),
         col("shingles"), col("tf"))
   }
@@ -188,65 +149,8 @@ class IncrementalIndex(spark: SparkSession, path: String,
         ()
       } finally { sigs.unpersist(); () }
     } finally graft.ckpt.Checkpoints.free(raw)
-    maybeAutoRefit()
+    stats.maybeAutoRefit(refit())
   }
-
-  /** Growth-triggered [[refit]] (constructor knob `autoRefitGrowth`
-    * > 1): when the stored corpus has grown past `autoRefitGrowth` ×
-    * the doc count the persisted stats were fitted on, the first-put
-    * stats are presumed drifted (stale idf, unconditioned boilerplate)
-    * and a refit runs as part of the put. Cost: one slim count job per
-    * put while under the threshold; the refit itself re-signatures all
-    * batches — amortised geometrically, like capacity-doubling rehash. */
-  // memo for the auto-refit poll: (confirmed distinct-doc count,
-  // manifest row count at confirmation). Re-puts of the same identity
-  // keep one row per batch, so the manifest row count only UPPER-BOUNDS
-  // the distinct docs — triggering refit on it alone would refit an
-  // unchanged corpus under a re-put-heavy stream.
-  private var confirmedDocs: Option[(Long, Long)] = None
-
-  /** Growth check, cheapest-evidence-first: (1) the manifest row count
-    * (one file read, no Spark job) upper-bounds distinct docs; (2) each
-    * row added since the last confirmation adds at most one distinct
-    * doc, so `d0 + (rows - rows0)` tightens the bound without a job;
-    * (3) an exact distinct count runs only when the bound crosses the
-    * threshold AND at least `autoRefitGrowth`·n rows have landed since
-    * the last confirmation — re-puts grow rows on every put, so
-    * without the backoff a re-put stream would pay the count job per
-    * put. The stride is denominated in the BOUND's currency (growth×
-    * the fit population), NOT a multiple of raw rows: a rows-multiple
-    * backoff lets a re-put-heavy prefix (rows ≫ distinct) defer a
-    * genuinely-due refit by millions of puts, serving a stale fit for
-    * the whole window. The stride is additionally floored at 1% of
-    * the confirmed store size: with a TINY fit population over a
-    * massively re-put-inflated store (4 ids, 10^9 rows — a corpus
-    * compaction would normally collapse), a bare growth·n stride
-    * re-arms the full-store count every handful of puts; the floor
-    * caps total confirm work at ~100 store scans per store doubling
-    * while keeping the detection delay ≤ max(growth·n, 1% of rows)
-    * puts. A shrunken row count (remove/compact rewrite) invalidates
-    * the memo. */
-  private def maybeAutoRefit(): Unit =
-    if (autoRefitGrowth > 1.0) loadStats().foreach { st =>
-      val rows = store.rowCount()
-      confirmedDocs.foreach { case (_, rows0) =>
-        if (rows < rows0) confirmedDocs = None
-      }
-      val needConfirm = confirmedDocs match {
-        case Some((d0, rows0)) =>
-          d0 + (rows - rows0) >= autoRefitGrowth * st.n &&
-            rows >= rows0 +
-              math.max(autoRefitGrowth * st.n, rows0 / 100.0)
-        case None => rows >= autoRefitGrowth * st.n
-      }
-      if (needConfirm) {
-        val distinct = store.all().select("doc_id").distinct().count()
-        if (distinct >= autoRefitGrowth * st.n) {
-          refit()
-          confirmedDocs = None
-        } else confirmedDocs = Some((distinct, rows))
-      }
-    }
 
   /** Band rows of signature rows, in the serving layout. `keep` carries
     * extra columns through (the refit rewrite keeps `batch`). */
@@ -282,7 +186,7 @@ class IncrementalIndex(spark: SparkSession, path: String,
         bandStore.writeBatch(bandRows(sigs), batchId)
       } finally { sigs.unpersist(); () }
     } finally graft.ckpt.Checkpoints.free(raw)
-    maybeAutoRefit()
+    stats.maybeAutoRefit(refit())
   }
 
   /** Reconcile the band layout to the signature store: regenerate the
@@ -402,43 +306,26 @@ class IncrementalIndex(spark: SparkSession, path: String,
    * re-signatures them all, so a corpus that drifted since the
    * first-put fit (new boilerplate flooding the bands, stale idf)
    * regains df-conditioned signatures without losing batch idempotence
-   * — batch directories and doc_ids are preserved.
-   *
-   * Crash protocol: the new stats land in a `stats.refit` marker
-   * FIRST; both stores are then rewritten through their swap commits;
-   * the marker is swapped into `stats` LAST. A crash anywhere mid-refit
-   * leaves the marker in place, and the next index operation replays
-   * the rewrite from it (idempotent — re-signaturing with the same
-   * stats is deterministic), so stats and signatures can never be
-   * served inconsistently.
+   * — batch directories and doc_ids are preserved. The fit runs over
+   * the LIVE corpus (latest-batch-resolved): superseded re-put rows
+   * would skew the df-conditioning toward re-put-heavy documents. Crash
+   * protocol: [[graft.ckpt.FittedModel.refit]].
    */
   def refit(): Unit = {
     require(!isEmpty, "refit() on an empty index")
     ensureClean()
-    val all = store.all()
-    require(all.columns.contains("tf"),
-      "this index predates the refit-capable layout (no stored tf " +
-        "column) — rebuild it with put() to enable refit")
-    // fit over the LIVE corpus (latest-batch-resolved): superseded
-    // re-put rows would skew the df-conditioning toward re-put-heavy
-    // documents, and — unit consistency with [[maybeAutoRefit]] —
-    // stats.n must count live identities, not stored rows, or the
-    // distinct-id trigger's threshold ratchets by the duplication
-    // factor after every refit (same defect shape as IvfIndex.refit,
-    // fixed together)
-    val newStats = DedupPipeline.fitCorpusStats(
-      graft.ckpt.BatchStore.latestBatchRows(all, "doc_id"), cfg)
-    // the marker publish is itself atomic: a crash DURING the parquet
-    // write must not leave a half-written marker that ensureClean
-    // would then try to replay from
-    Fs.publishByRename(statsNextPath, hconf)(saveStatsTo(_, newStats))
-    completeRefit(newStats)
+    stats.refit { live =>
+      require(live.columns.contains("tf"),
+        "this index predates the refit-capable layout (no stored tf " +
+          "column) — rebuild it with put() to enable refit")
+      DedupPipeline.fitCorpusStats(live, cfg)
+    }
   }
 
-  /** Replay/complete a pending refit: re-signature every batch with the
-    * marker stats, regenerate the band layout, then commit the stats
-    * swap. Idempotent — safe to re-run after a crash at any point. */
-  private def completeRefit(st: CorpusStats): Unit = {
+  /** Re-signature every batch with `st` and regenerate the band layout
+    * (the refit rewrite, replayed from the marker after a crash).
+    * Idempotent — safe to re-run after a crash at any point. */
+  private def resignature(st: CorpusStats): Unit = {
     store.rewrite(df =>
       DedupPipeline.applySignatures(df, st, cfg, keepTf = true))
     if (bandStore.isEmpty)
@@ -448,8 +335,6 @@ class IncrementalIndex(spark: SparkSession, path: String,
       // layout is generated fresh from the re-signatured store instead
       reconcileBands()
     else bandStore.rewrite(_ => bandRows(store.all(), keep = Seq("batch")))
-    Fs.swapInto(statsNextPath, statsPath, hconf)
-    statsMemo = None // the stamp changed; drop the memo eagerly
   }
 
   // pending-remove marker: the urls to remove are published here
@@ -467,13 +352,8 @@ class IncrementalIndex(spark: SparkSession, path: String,
     * removal; the two markers are mutually exclusive by construction
     * (each public mutation drains both before publishing its own). */
   private def ensureClean(): Unit = {
-    // a crash DURING the final stats swap: complete the swap itself
-    Fs.recoverSwap(statsNextPath, statsPath, hconf)
     if (Fs.exists(removePendingPath, hconf)) completeRemove()
-    // a crash BEFORE the stats swap: marker still present — replay the
-    // rewrites from it (the stores may hold old, new, or mixed
-    // signatures; the replay is idempotent either way)
-    loadStatsFrom(statsNextPath).foreach(completeRefit)
+    stats.replay()
   }
 
   /** Remove documents by url (reference `Remove(id)`): the url set is
@@ -550,36 +430,9 @@ class IncrementalIndex(spark: SparkSession, path: String,
     * in the query batch (PartitionFilters in the scan — sub-linear in
     * the index size, like the reference's per-band bucket lookup); the
     * pruning set's size is bounded by the fixed pb domain, never by
-    * the corpus. Falls back to a full band join on an index written
-    * before the band layout existed. Returns
-    * (query_url, match_url, jaccard). */
-  def search(pages: DataFrame): DataFrame = {
-    var tries = 0
-    while (tries < 3) {
-      // snapshot validation (same shape as IvfIndex.search): reads
-      // take no lease, so a refit completing mid-search re-signatures
-      // the stored rows under NEW stats while this search signed its
-      // queries with the OLD ones — band keys stop lining up and true
-      // matches vanish silently. Materialize the (match-sized) result,
-      // confirm the stats are the ones the queries were signed with,
-      // retry on a changed stamp. ~1 s mtime granularity narrows, not
-      // closes, the cross-process window.
-      val stamp = Fs.modifiedMs(statsPath, hconf)
-      val (plan, pin) = searchPlanPinned(pages)
-      // the result snapshot no longer references the query pin — free
-      // it eagerly (invariant 32: a per-micro-batch serving loop must
-      // not accrete one pinned query block set per call)
-      val res =
-        try plan.localCheckpoint(true)
-        finally pin.foreach(graft.ckpt.Checkpoints.free)
-      if (Fs.modifiedMs(statsPath, hconf) == stamp) return res
-      graft.ckpt.Checkpoints.free(res)
-      tries += 1
-    }
-    throw new IllegalStateException(
-      s"index at $path refit three times during one search — refit " +
-        "churn; retry when the writer settles")
-  }
+    * the corpus. Returns (query_url, match_url, jaccard). */
+  def search(pages: DataFrame): DataFrame =
+    stats.validated(searchPlanPinned(pages))
 
   /** The LAZY search frame — [[search]] without the refit-consistency
     * validation, for plan inspection (PartitionFilters evidence) and
@@ -637,47 +490,37 @@ class IncrementalIndex(spark: SparkSession, path: String,
     // orphan the query pin — free it on the error path, rethrow
     try {
     val stored = all()
-    def bands(df: DataFrame) = Lsh.explodeBands(df, "doc_id",
-      Lsh.minhashBandKeys(col("minhash"), cfg.bands, cfg.rows),
-      element_at(col("minhash"), 1))
-    val candsRaw =
-      if (bandStore.isEmpty) {
-        // legacy layout: explode the whole stored table and shuffle
-        bands(q).select(col("doc_id").as("qid"), col("band"), col("key"))
-          .join(bands(stored)
-            .select(col("doc_id").as("sid"), col("band"), col("key")),
-            Seq("band", "key"))
-      } else {
-        val qb = bands(q)
-          .select(col("doc_id").as("qid"),
-            pbCol(col("band"), col("key")).as("pb"), col("key"))
-        // the pruning set: distinct pb values in the query batch —
-        // collect is bounded by the pb DOMAIN (bands·bandBuckets),
-        // a config constant, regardless of query or index size
-        val pbs = qb.select("pb").distinct().collect().map(_.getInt(0))
-        // read-only repair: a batch whose band rows never landed (a put
-        // crashed between its two writes) is served from band rows
-        // computed in-plan from its signatures — search never takes the
-        // band store's writer lease; the durable backfill happens on
-        // the next mutation (reconcileBands). Only the crashed batch
-        // pays an unpruned scan, and only until then.
-        val have = bandStore.batchIds().toSet
-        val missing = store.batchIds().filterNot(have)
-        val storedBands0 = bandStore.all().select("pb", "key", "doc_id")
-        val storedBands =
-          if (missing.isEmpty) storedBands0
-          else storedBands0.unionByName(
-            bandRows(stored.filter(
-              col("batch").isin(missing.map(Long.box): _*))))
-        // skip the predicate when the query batch touches every pb: it
-        // prunes nothing and a full-domain IN costs optimizer time
-        (if (pbs.length < cfg.bands * cfg.bandBuckets)
-           storedBands.filter(col("pb").isin(pbs.map(Int.box).toSeq: _*))
-         else storedBands)
-          .select(col("doc_id").as("sid"), col("pb"), col("key"))
-          .join(qb, Seq("pb", "key"))
-      }
-    val cands = candsRaw
+    val qb = Lsh.explodeBands(q, "doc_id",
+        Lsh.minhashBandKeys(col("minhash"), cfg.bands, cfg.rows),
+        element_at(col("minhash"), 1))
+      .select(col("doc_id").as("qid"),
+        pbCol(col("band"), col("key")).as("pb"), col("key"))
+    // the pruning set: distinct pb values in the query batch — collect
+    // is bounded by the pb DOMAIN (bands·bandBuckets), a config
+    // constant, regardless of query or index size
+    val pbs = qb.select("pb").distinct().collect().map(_.getInt(0))
+    // read-only repair: a batch whose band rows never landed (a put
+    // crashed between its two writes — for the index's only put, no
+    // band layout exists at all) is served from band rows computed
+    // in-plan from its signatures — search never takes the band
+    // store's writer lease; the durable backfill happens on the next
+    // mutation (reconcileBands). Only the crashed batch pays an
+    // unpruned scan, and only until then.
+    val have = bandStore.batchIds().toSet
+    val missing = store.batchIds().filterNot(have)
+    lazy val inPlan = bandRows(stored.filter(
+      col("batch").isin(missing.map(Long.box): _*)))
+    val storedBands =
+      if (have.isEmpty) inPlan
+      else if (missing.isEmpty) bandStore.all().select("pb", "key", "doc_id")
+      else bandStore.all().select("pb", "key", "doc_id").unionByName(inPlan)
+    // skip the predicate when the query batch touches every pb: it
+    // prunes nothing and a full-domain IN costs optimizer time
+    val cands = (if (pbs.length < cfg.bands * cfg.bandBuckets)
+        storedBands.filter(col("pb").isin(pbs.map(Int.box).toSeq: _*))
+      else storedBands)
+      .select(col("doc_id").as("sid"), col("pb"), col("key"))
+      .join(qb, Seq("pb", "key"))
       .filter(col("qid") =!= col("sid"))
       .select("qid", "sid").distinct()
     val qs = q.select(col("doc_id").as("qid"), col("url").as("query_url"),

@@ -132,9 +132,13 @@ object Ivf {
    * Static probe kernel shared by interpreted eval and generated code:
    * top-`nProbe` cells by dot(vec, centroid) — centroids are unit-norm,
    * so the ranking equals cosine ranking for any vec norm. Ties break
-   * to the lower cell id (insertion keeps first-seen). `isFloat`
-   * selects the element reader (embeddings are float arrays; derived
-   * frames may have cast to double).
+   * to the lower cell id (insertion keeps first-seen). Always returns
+   * min(nProbe, nCells) DISTINCT cells, for any input: a NaN dot (a NaN
+   * element, or ±Inf meeting a zero component) ranks as −Inf, and the
+   * first cells fill the list unconditionally, so a vector whose every
+   * dot is NaN or −Inf probes the lowest cells instead of repeating
+   * cell 0. `isFloat` selects the element reader (embeddings are float
+   * arrays; derived frames may have cast to double).
    */
   def probeKernel(vec: ArrayData, flat: Array[Double], dim: Int,
                   nProbe: Int, isFloat: Boolean): ArrayData = {
@@ -148,21 +152,22 @@ object Ivf {
           "is a schema error)")
     val topCell = new Array[Int](p)
     val topDot = new Array[Double](p)
-    java.util.Arrays.fill(topDot, Double.NegativeInfinity)
     var j = 0
     while (j < nCells) {
-      var dot = 0.0
+      var raw = 0.0
       var d = 0
       val off = j * dim
       while (d < n) {
         val x = if (isFloat) vec.getFloat(d).toDouble else vec.getDouble(d)
-        dot += x * flat(off + d)
+        raw += x * flat(off + d)
         d += 1
       }
-      // insertion into the small descending top-p list; strict > keeps
-      // the earlier (lower) cell on ties
-      if (dot > topDot(p - 1)) {
-        var k = p - 1
+      val dot = if (java.lang.Double.isNaN(raw)) Double.NegativeInfinity else raw
+      // insertion into the small descending top-p list (its first j
+      // slots are filled while j < p); strict > keeps the earlier
+      // (lower) cell on ties
+      if (j < p || dot > topDot(p - 1)) {
+        var k = math.min(j, p - 1)
         while (k > 0 && dot > topDot(k - 1)) {
           topDot(k) = topDot(k - 1); topCell(k) = topCell(k - 1); k -= 1
         }

@@ -22,83 +22,69 @@ import graft.verify.Measures
  * batches far from the trained centroids pile into few cells, so
  * probing loses recall and pruning loses selectivity) is recovered by
  * [[refit]]: re-fit the codebook over ALL stored vectors and re-assign
- * every batch, marker-first / swap-last, crash-replayed by the next
- * public operation — after a refit the index is equivalent to one
- * freshly built from the full corpus (spec'd).
+ * every batch — after a refit the index is equivalent to one freshly
+ * built from the full corpus (spec'd). The codebook's first fit, memo,
+ * crash-replayed refit, growth-triggered auto-refit and snapshot-
+ * validated search are [[graft.ckpt.FittedModel]]'s lifecycle.
+ *
+ * @param pruneMaxFraction the stored-scan partition filter is attached
+ *   only while the batch's probed cells are at most this fraction of
+ *   the codebook (see [[searchPlan]]); `0.0` never prunes, `1.0` always
+ *   does. Results are identical ABSENT cross-cell re-puts: an id re-put
+ *   into a cell outside the probe set serves its newest PROBED row on
+ *   the pruned path but its globally newest row unpruned —
+ *   `remove()+put()` is the exact-replace path either way.
  */
-/** @param pruneScan diagnostic/benchmark knob: `false` drops the
-  *   partition filter on the stored scan (the cell equi-join still
-  *   bounds candidates, but every cell's files are read). Results are
-  *   identical ABSENT cross-cell re-puts: an id re-put into a cell
-  *   outside the probe set serves its newest PROBED row on the pruned
-  *   path but its globally newest row unpruned — `remove()+put()` is
-  *   the exact-replace path either way. Exists so the serving
-  *   benchmark can measure what the pruning is worth in bytes and
-  *   wall time; leave `true` in use. */
 class IvfIndex(spark: SparkSession, path: String,
                nCells: Int = 256, nProbe: Int = 8,
                iters: Int = 10, sampleCap: Int = 4096,
                autoRefitGrowth: Double = 0.0,
-               pruneScan: Boolean = true,
                pruneMaxFraction: Double = 0.5) {
-  import graft.ckpt.Fs
+  import IvfIndex.Codebook
 
   private val store = new graft.ckpt.BatchStore(spark, s"$path/rows",
     subPartitionCols = Seq("cell"))
-  private val hconf = spark.sparkContext.hadoopConfiguration
-  private def bookPath = s"$path/codebook"
-  private def bookNextPath = s"$path/codebook.refit"
+
+  // `codebook` holds the centroids plus a sentinel cell −1 row carrying
+  // the fit size, so book + size commit atomically in one parquet. A
+  // codebook written before the sentinel existed reads a None fit size
+  // and never auto-refits until a manual [[refit]] stamps it.
+  private val book = new graft.ckpt.FittedModel[Codebook](spark,
+      s"$path/codebook", store, "id", autoRefitGrowth)(
+    read = p => {
+      val rows = spark.read.parquet(p).orderBy("cell").collect()
+      Codebook(rows.filter(_.getInt(0) >= 0).map(_.getSeq[Double](1).toArray),
+        rows.find(_.getInt(0) == -1).map(_.getSeq[Double](1).head.toLong))
+    },
+    write = (b, p) => {
+      import spark.implicits._
+      (b.cents.zipWithIndex.map { case (c, j) => (j, c.toSeq) } ++
+          b.fitSize.map(n => (-1, Seq(n.toDouble)))).toSeq
+        .toDF("cell", "centroid").repartition(1)
+        .write.mode("overwrite").parquet(p)
+    },
+    fitSize = _.fitSize,
+    reassign = b => store.rewrite(df =>
+      df.select(cellOf(b), col("id"), col("vec"), col("batch"))))
 
   def isEmpty: Boolean = store.isEmpty
 
-  private def loadBookFrom(p: String): Option[Array[Array[Double]]] =
-    if (!Fs.exists(p, hconf)) None
-    else Some(spark.read.parquet(p).filter(col("cell") >= 0).orderBy("cell")
-      .collect().map(_.getSeq[Double](1).toArray))
+  /** The assignment cell of the `vec` column under `b`. */
+  private def cellOf(b: Codebook) =
+    element_at(Ivf.probe(col("vec"), b.cents, 1), 1).as("cell")
 
-  // book + fit-size memo keyed by the codebook dir's FS stamp: every
-  // put paid two parquet read+collect jobs (loadBook in assigned,
-  // fitSizeFrom in the growth check) for a file that only changes on
-  // refit. The stamp re-read is FS metadata only (no Spark job); an
-  // in-process refit invalidates explicitly, a cross-process refit is
-  // picked up by the stamp change (same ~1 s granularity caveat as the
-  // search snapshot validation).
-  private var bookMemo: Option[(Long, Array[Array[Double]], Option[Long])] = None
-
-  private def loadBook(): Option[Array[Array[Double]]] = {
-    Fs.modifiedMs(bookPath, hconf) match {
-      case None => bookMemo = None; None
-      case Some(st) => bookMemo match {
-        case Some((s, b, _)) if s == st => Some(b)
-        case _ => loadBookFrom(bookPath).map { b =>
-          bookMemo = Some((st, b, fitSizeFrom(bookPath)))
-          b
-        }
-      }
-    }
-  }
-
-  /** Fit-population of the CURRENT codebook (memo-served). */
-  private def fitSize(): Option[Long] = {
-    loadBook(); bookMemo.flatMap(_._3)
-  }
-
-  /** Doc count the codebook at `p` was fitted on (rides as a sentinel
-    * cell −1 row, so book + size commit atomically in one parquet).
-    * None for a codebook written before the sentinel existed — such a
-    * book never auto-refits until a manual [[refit]] stamps it. */
-  private def fitSizeFrom(p: String): Option[Long] =
-    spark.read.parquet(p).filter(col("cell") === -1)
-      .select("centroid").limit(1).collect().headOption
-      .map(_.getSeq[Double](0)(0).toLong)
-
-  private def saveBookTo(p: String, cents: Array[Array[Double]],
-                         nAtFit: Long): Unit = {
-    import spark.implicits._
-    (cents.zipWithIndex.map { case (c, j) => (j, c.toSeq) } :+
-        ((-1, Seq(nAtFit.toDouble)))).toSeq
-      .toDF("cell", "centroid").repartition(1)
-      .write.mode("overwrite").parquet(p)
+  /** Fit a codebook over (id, vec) rows, stamped with the distinct-id
+    * count it was fitted on — identities, not rows (DESIGN invariant
+    * 30): stamping raw rows from a replay-heavy batch would defer the
+    * next auto-refit by the duplication factor. A corpus smaller than
+    * nCells fits a book as small as the data (probe clamps nProbe to
+    * the book) instead of refusing — the streaming-ingest case, where
+    * batch one is a second of traffic; with autoRefitGrowth set, later
+    * growth refits the book back toward the configured nCells. */
+  private def fit(v: DataFrame): Codebook = {
+    val n = v.select("id").distinct().count()
+    val eff = math.max(1L, math.min(nCells.toLong, n)).toInt
+    Codebook(Ivf.fitCentroids(v, "id", "vec", eff, iters, sampleCap), Some(n))
   }
 
   /** Assign rows (id, vec) to cells with the persisted codebook
@@ -110,37 +96,7 @@ class IvfIndex(spark: SparkSession, path: String,
     val v = vecs.select(coalesce(col("id").cast("long"), raise_error(lit(
         "identity-less vector: null id — IvfIndex rows are keyed by id"))
         .cast("long")).as("id"), col("vec"))
-    // first-fit check + publish under the store's writer lease
-    // (double-checked): two concurrent first puts would otherwise each
-    // fit a codebook and the later publish would overwrite the earlier
-    // one while the earlier writer's rows — cell-assigned under its own
-    // book — still commit, leaving the persisted book inconsistent with
-    // stored cells (pruned searches then silently miss). The loser of
-    // the lease fails loudly, the single-writer contract.
-    val book = loadBook().getOrElse(store.withLease(loadBook().getOrElse {
-      // distinct identities, not rows — the unit contract the refit
-      // path documents; stamping raw rows from a replay-heavy first
-      // batch would defer the first auto-refit by the duplication
-      // factor
-      val n = v.select("id").distinct().count()
-      // a first batch smaller than nCells fits a book as small as the
-      // data (probe clamps nProbe to the book) instead of refusing —
-      // the streaming-ingest case, where batch one is a second of
-      // traffic; with autoRefitGrowth set, later growth refits the book
-      // back toward the configured nCells
-      val eff = math.max(1L, math.min(nCells.toLong, n)).toInt
-      val b = Ivf.fitCentroids(v, "id", "vec", eff, iters, sampleCap)
-      // atomic first-fit publish (same reason as the refit path's
-      // marker): a crash mid-parquet-write must not leave a partial
-      // codebook that loadBook would silently read as fewer-than-nCells
-      // centroids. The row store is still empty here, so losing the fit
-      // loses nothing — the next put re-fits.
-      Fs.publishByRename(bookPath, hconf)(saveBookTo(_, b, n))
-      b
-    }))
-    v.select(
-      element_at(Ivf.probe(col("vec"), book, 1), 1).as("cell"),
-      col("id"), col("vec"))
+    v.select(cellOf(book.fitFirst(fit(v))), col("id"), col("vec"))
   }
 
   /** Append (id, vec) rows as a new batch under one writer-lease
@@ -150,9 +106,9 @@ class IvfIndex(spark: SparkSession, path: String,
     // assigned(): a first put with zero rows would otherwise attempt a
     // codebook fit over an empty sample and throw
     if (vecs.isEmpty) return
-    ensureRefitComplete()
+    book.replay()
     store.append(assigned(vecs))
-    maybeAutoRefit()
+    book.maybeAutoRefit(refit())
   }
 
   /** Idempotent per-batch insert (streaming replay safe). */
@@ -160,53 +116,10 @@ class IvfIndex(spark: SparkSession, path: String,
     // empty micro-batches are no-ops — see put(): an empty FIRST batch
     // must not crash the streaming query on a zero-sample codebook fit
     if (vecs.isEmpty) return
-    ensureRefitComplete()
+    book.replay()
     store.writeBatch(assigned(vecs), batchId)
-    maybeAutoRefit()
+    book.maybeAutoRefit(refit())
   }
-
-  /** Growth-triggered [[refit]] (same policy as
-    * [[IncrementalIndex]]'s knob): when the stored corpus outgrows the
-    * codebook's fit population by `autoRefitGrowth`×, later batches are
-    * presumed to have drifted the cell balance (recall and pruning
-    * selectivity both degrade) and a refit runs as part of the put —
-    * geometrically amortised, like capacity-doubling rehash. */
-  // memo: (confirmed distinct ids, manifest row count at confirmation)
-  // — see IncrementalIndex.maybeAutoRefit for the bounding argument
-  // (re-puts keep one row per batch, so rows only upper-bound ids)
-  private var confirmedIds: Option[(Long, Long)] = None
-
-  /** Growth check, cheapest-evidence-first: manifest row count (one
-    * file read, no Spark job) → memo-tightened distinct upper bound →
-    * an exact distinct count only when the bound crosses AND at least
-    * max(`autoRefitGrowth`·atFit, 1% of the confirmed store) rows
-    * landed since the last confirmation (stride in the BOUND's
-    * currency, floored by store size — see
-    * IncrementalIndex.maybeAutoRefit for why a rows-multiple backoff
-    * defers a due refit and why the bare identity stride over-counts
-    * on a tiny-fit re-put-inflated store). */
-  private def maybeAutoRefit(): Unit =
-    if (autoRefitGrowth > 1.0)
-      fitSize().foreach { atFit =>
-        val rows = store.rowCount()
-        confirmedIds.foreach { case (_, rows0) =>
-          if (rows < rows0) confirmedIds = None
-        }
-        val needConfirm = confirmedIds match {
-          case Some((d0, rows0)) =>
-            d0 + (rows - rows0) >= autoRefitGrowth * atFit &&
-              rows >= rows0 +
-                math.max(autoRefitGrowth * atFit, rows0 / 100.0)
-          case None => rows >= autoRefitGrowth * atFit
-        }
-        if (needConfirm) {
-          val distinct = store.all().select("id").distinct().count()
-          if (distinct >= autoRefitGrowth * atFit) {
-            refit()
-            confirmedIds = None
-          } else confirmedIds = Some((distinct, rows))
-        }
-      }
 
   /** Consolidate batches ≤ `upTo` into one directory, applying
     * last-put-wins per id while the batch order still exists (after the
@@ -215,7 +128,7 @@ class IvfIndex(spark: SparkSession, path: String,
     * replay-safety contract (only compact below the streaming
     * checkpoint's committed watermark). */
   def compact(upTo: Long): Unit = {
-    ensureRefitComplete()
+    book.replay()
     store.compact(upTo)(graft.ckpt.BatchStore.latestBatchRows(_, "id"))
   }
 
@@ -223,7 +136,7 @@ class IvfIndex(spark: SparkSession, path: String,
     * cast-to-null) removal id matches nothing in the anti-join and
     * would silently no-op — it raises instead (invariant 33). */
   def remove(ids: DataFrame): Unit = {
-    ensureRefitComplete()
+    book.replay()
     store.rewrite(_.join(ids.select(coalesce(col("id").cast("long"),
         raise_error(lit("identity-less remove: null id")).cast("long"))
         .as("id")),
@@ -235,49 +148,16 @@ class IvfIndex(spark: SparkSession, path: String,
 
   /**
    * Re-fit the codebook over every stored vector and re-assign all
-   * batches (same crash protocol as [[IncrementalIndex.refit]]: the new
-   * codebook lands in a `codebook.refit` marker first, the store is
-   * rewritten through its swap commit, the marker is swapped into place
-   * last; a crash anywhere is replayed idempotently). After a refit the
-   * index serves exactly what a fresh build over the full corpus would.
+   * batches through [[graft.ckpt.FittedModel.refit]]'s crash protocol.
+   * The fit runs over the LIVE corpus (latest-batch-resolved, one row
+   * per live id): a fresh build would only ever see each id's newest
+   * vector. After a refit the index serves exactly what a fresh build
+   * over the full corpus would.
    */
   def refit(): Unit = {
     require(!isEmpty, "refit() on an empty index")
-    ensureRefitComplete()
-    // fit over the LIVE corpus (latest-batch-resolved, one row per
-    // live id): a fresh build would only ever see each id's newest
-    // vector, and — unit consistency with [[maybeAutoRefit]] — the
-    // recorded fit size must count identities, not rows. Recording
-    // raw rows would ratchet the refit threshold by the re-put
-    // duplication factor (refit at 1k ids across 5k rows stamps 5k;
-    // the next refit then waits for growth×5k ids instead of
-    // growth×1k, drifting the codebook indefinitely in exactly the
-    // re-put workload the distinct trigger exists for).
-    val live = graft.ckpt.BatchStore.latestBatchRows(store.all(), "id")
-    // distinct, not live.count(): latestBatchRows keeps every row of an
-    // id's newest batch, so an input batch that stated one id twice
-    // would stamp rows (> identities) and defer the next distinct-id-
-    // triggered auto-refit by the in-batch duplication factor
-    val n = live.select("id").distinct().count()
-    // same small-corpus clamp as the first fit: the book grows back
-    // toward the configured nCells as the stored corpus does
-    val eff = math.max(1L, math.min(nCells.toLong, n)).toInt
-    val book = Ivf.fitCentroids(live, "id", "vec", eff, iters, sampleCap)
-    Fs.publishByRename(bookNextPath, hconf)(saveBookTo(_, book, n))
-    completeRefit(book)
-  }
-
-  private def completeRefit(book: Array[Array[Double]]): Unit = {
-    store.rewrite(df => df.select(
-      element_at(Ivf.probe(col("vec"), book, 1), 1).as("cell"),
-      col("id"), col("vec"), col("batch")))
-    Fs.swapInto(bookNextPath, bookPath, hconf)
-    bookMemo = None // the stamp changed; drop the memo eagerly
-  }
-
-  private def ensureRefitComplete(): Unit = {
-    Fs.recoverSwap(bookNextPath, bookPath, hconf)
-    loadBookFrom(bookNextPath).foreach(completeRefit)
+    book.replay()
+    book.refit(fit)
   }
 
   /**
@@ -288,37 +168,8 @@ class IvfIndex(spark: SparkSession, path: String,
    * never by query or index size. Output: (query_id, neighbor_id,
    * rank), rank 1..k by (cos desc, id) — [[Ivf.ivfTopK]]'s contract.
    */
-  def search(queries: DataFrame, k: Int): DataFrame = {
-    var tries = 0
-    while (tries < 3) {
-      // snapshot validation: reads take no lease, so a refit completing
-      // MID-SEARCH swaps in rows whose cell assignments come from the
-      // NEW codebook while this search probed with the OLD one — the
-      // pruned scan would silently miss true neighbours. Materialize
-      // the (small, top-k) result, then confirm the codebook is the
-      // one the probe set was computed from; a stamp change means a
-      // refit landed underneath and the search retries on the new
-      // snapshot. (mtime granularity ~1 s narrows, not closes, the
-      // window — a refit completing within the same stamp tick as the
-      // book load is undetected; single-writer mutation makes that a
-      // cross-process race on an already-rare overlap.)
-      val stamp = Fs.modifiedMs(bookPath, hconf)
-      val (plan, pin) = searchPlanPinned(queries, k)
-      // the result snapshot no longer references the query pin — free
-      // it eagerly (invariant 32: a serving loop that searches per
-      // micro-batch must not accrete one pinned query block set per
-      // call until driver GC)
-      val res =
-        try plan.localCheckpoint(true)
-        finally graft.ckpt.Checkpoints.free(pin)
-      if (Fs.modifiedMs(bookPath, hconf) == stamp) return res
-      graft.ckpt.Checkpoints.free(res)
-      tries += 1
-    }
-    throw new IllegalStateException(
-      s"IVF index at $path refit three times during one search — " +
-        "refit churn; retry when the writer settles")
-  }
+  def search(queries: DataFrame, k: Int): DataFrame =
+    book.validated(searchPlanPinned(queries, k))
 
   /** The LAZY search frame — [[search]] without the refit-consistency
     * validation, for plan inspection (PartitionFilters evidence) and
@@ -332,10 +183,10 @@ class IvfIndex(spark: SparkSession, path: String,
     * pin may be freed once the frame is materialized (package-visible
     * so BenchIvf's measure loop can release its per-call pin). */
   private[graft] def searchPlanPinned(queries: DataFrame, k: Int)
-      : (DataFrame, DataFrame) = {
-    ensureRefitComplete()
-    val book = loadBook().getOrElse(
-      throw new IllegalStateException(s"empty IVF index at $path"))
+      : (DataFrame, Option[DataFrame]) = {
+    book.replay()
+    val cents = book.current().getOrElse(
+      throw new IllegalStateException(s"empty IVF index at $path")).cents
     // pin the query frame before the driver collects the pruning set
     // from it: the stored-side cell filter and the scoring join both
     // re-evaluate it, and a nondeterministic caller frame (sample,
@@ -353,7 +204,7 @@ class IvfIndex(spark: SparkSession, path: String,
     // a failure below (the cell-pruning collect) must not orphan the
     // query pin — free it on the error path, rethrow
     try {
-    val q = q0.withColumn("cell", explode(Ivf.probe(col("qv"), book, nProbe)))
+    val q = q0.withColumn("cell", explode(Ivf.probe(col("qv"), cents, nProbe)))
     // pruning set: distinct probed cells — domain-bounded collect
     val cells = q.select("cell").distinct().collect().map(_.getInt(0))
     val stored0 = store.all()
@@ -371,8 +222,8 @@ class IvfIndex(spark: SparkSession, path: String,
     // drops the clearly-losing ones). Results are unchanged either way
     // (the cell equi-join bounds candidates; the predicate only skips
     // file reads).
-    val probedFraction = cells.length.toDouble / book.length
-    val stored = (if (pruneScan && probedFraction <= pruneMaxFraction)
+    val probedFraction = cells.length.toDouble / cents.length
+    val stored = (if (probedFraction <= pruneMaxFraction)
         stored0.filter(col("cell").isin(cells.map(Int.box).toSeq: _*))
       else stored0)
       .select(col("cell"), col("id").as("neighbor_id"), col("vec").as("cv"),
@@ -413,8 +264,15 @@ class IvfIndex(spark: SparkSession, path: String,
       .orderBy(col("cos").desc, col("neighbor_id"))
     (scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank")), q0)
+      .select(col("query_id"), col("neighbor_id"), col("rank")), Some(q0))
     } catch { case t: Throwable =>
       graft.ckpt.Checkpoints.free(q0); throw t }
   }
+}
+
+object IvfIndex {
+  /** Unit-norm centroids plus the live-id count they were fitted on
+    * (None: a codebook written before the fit-size sentinel). */
+  private final case class Codebook(cents: Array[Array[Double]],
+                                    fitSize: Option[Long])
 }
