@@ -12,16 +12,47 @@ import graft.substr.SuffixArrayStage
 import graft.ckpt.{CheckpointStore, EphemeralStore}
 
 /**
- * Pinned dedup configuration (FIXTURES.md §1): shingle w=5, MinHash 128
- * perms = 32 bands × 4 rows, SimHash 64 bits, Jaccard τ=0.8, Hamming
- * ≤3/64. The MinHash signature length is always bands·rows (the
- * reference requires the same, `lsh.go:124-127`), so it is not a
- * separate knob.
+ * Dedup configuration. The pinned values (FIXTURES.md §1) are constants
+ * of every config, not constructor parameters: shingle w=5
+ * ([[shingleW]]), SimHash 64 bits with Hamming ≤3/64 ([[maxHamming]]),
+ * Jaccard τ=0.8 ([[tau]]), the substring pass ([[substrMinRun]]) and the
+ * SimHash rotation scan always on, and a 3-round id audit
+ * ([[idAuditRounds]]). The settable values are the MinHash band shape
+ * (default 32 bands × 4 rows = 128 perms), the hot-shingle cut, the
+ * broadcast guard and the serving-index bucket count. The MinHash
+ * signature length is always bands·rows (the reference requires the
+ * same, `lsh.go:124-127`), so it is not a separate knob.
  */
 case class DedupConfig(
-  shingleW: Int = 5,
   bands: Int = 32,
   rows: Int = 4,
+  // df-conditioned shingling: shingles appearing in more than
+  // max(hotShingleMinDf, hotShingleDfFrac·reps) documents are excluded
+  // from MinHash banding (NOT from verification). Boilerplate shared by
+  // k pages would otherwise produce O(k²) false candidate pairs —
+  // measured 6.2M candidates (98% false) on a 341k corpus with a 5%
+  // boilerplate block.
+  hotShingleMinDf: Int = 8,
+  hotShingleDfFrac: Double = 0.001,
+  hotShingleCap: Int = 1 << 20,
+  // broadcast guard for the three id-set joins (exact-dup copies,
+  // candidate members, substring-pass members): a hint("broadcast") is
+  // only attached when the audited distinct-id count bounding them is
+  // below this limit (16.7M ids ≈ 135 MB on the driver); above it the
+  // planner picks a shuffle join. At the north rule's 10^12-doc
+  // operating point the sets are in the billions — an unguarded hint
+  // would OOM the driver.
+  broadcastIdLimit: Long = 16L << 20,
+  // serving-index layout: stored band rows are partitioned by
+  // pb = band·bandBuckets + (key mod bandBuckets), so an incremental
+  // search prunes the stored scan to the partitions its query batch
+  // actually touches (the reference's sub-linear bucket lookup,
+  // lsh.go:87-108, as PARTITION PRUNING instead of an in-memory map).
+  // The pb domain (bands·bandBuckets) bounds the driver-collected
+  // pruning set; 32·64 = 2048 partitions keeps per-partition files
+  // large at web scale while a 100-doc query batch touches ≲ 5%.
+  bandBuckets: Int = 64) {
+  val shingleW: Int = 5
   // Manku et al. '07 family: `simhashTables` bit-rotations of the
   // 64-bit simhash, each range-sorted and scanned with a
   // `chainWidth`-wide neighborhood, Hamming-verified in-scan
@@ -34,58 +65,31 @@ case class DedupConfig(
   // more than `chainWidth` same-prefix rows under every rotation can
   // be missed — bounded by SeamLossSpec, backstopped by the
   // MinHash-Jaccard path.
-  simhashTables: Int = 4,
-  tau: Double = 0.8,
-  maxHamming: Int = 3,
-  maxBucket: Int = 64,
-  chainWidth: Int = 3,
-  numFeatures: Int = 1 << 18,
-  substrMinRun: Int = 60,
-  enableSubstr: Boolean = true,
-  enableSimhashBands: Boolean = true,
-  // df-conditioned shingling: shingles appearing in more than
-  // max(hotShingleMinDf, hotShingleDfFrac·reps) documents are excluded
-  // from MinHash banding (NOT from verification). Boilerplate shared by
-  // k pages would otherwise produce O(k²) false candidate pairs —
-  // measured 6.2M candidates (98% false) on a 341k corpus with a 5%
-  // boilerplate block.
-  hotShingleMinDf: Int = 8,
-  hotShingleDfFrac: Double = 0.001,
-  hotShingleCap: Int = 1 << 20,
-  // broadcast guard for the two id-set joins (exact-dup copies,
-  // candidate members): a hint("broadcast") is only attached when the
-  // MEASURED id count is below this limit (16.7M ids ≈ 135 MB on the
-  // driver); above it the planner picks a shuffle join. At the north
-  // rule's 10^12-doc operating point both sets are in the billions —
-  // an unguarded hint would OOM the driver, and the guard count is a
-  // cheap job over an already-cached slim frame (or a parquet
-  // metadata-only count on the resume path).
-  broadcastIdLimit: Long = 16L << 20,
+  val simhashTables: Int = 4
+  val tau: Double = 0.8
+  val maxHamming: Int = 3
+  val maxBucket: Int = 64
+  val chainWidth: Int = 3
+  val numFeatures: Int = 1 << 18
+  val substrMinRun: Int = 60
+  // both extra edge sources always run; the flags stay readable for
+  // code that recomposes the stages (perfbench's TracedDedup)
+  val enableSubstr: Boolean = true
+  val enableSimhashBands: Boolean = true
   // 64-bit id collision audit (birthday bound at the 10^12-doc design
   // point predicts ~10^4 silent xxhash64(url) collisions, each merging
   // two unrelated documents into one cluster): up to idAuditRounds
   // detect-and-rehash passes over a slim (doc_id, url) projection, then
-  // a loud failure if collisions persist. 0 disables the audit —
-  // including the null-identity guard (rows with neither a doc_id nor
-  // a url fail loudly inside the audit): disabling it means the caller
-  // owns identity integrity entirely.
-  idAuditRounds: Int = 3,
-  // serving-index layout: stored band rows are partitioned by
-  // pb = band·bandBuckets + (key mod bandBuckets), so an incremental
-  // search prunes the stored scan to the partitions its query batch
-  // actually touches (the reference's sub-linear bucket lookup,
-  // lsh.go:87-108, as PARTITION PRUNING instead of an in-memory map).
-  // The pb domain (bands·bandBuckets) bounds the driver-collected
-  // pruning set; 32·64 = 2048 partitions keeps per-partition files
-  // large at web scale while a 100-doc query batch touches ≲ 5%.
-  bandBuckets: Int = 64,
-  stopWords: Seq[String] = Nil)
+  // a loud failure if collisions persist. The audit also guards null
+  // identity (rows with neither a doc_id nor a url fail loudly).
+  val idAuditRounds: Int = 3
+}
 
 /**
  * End-to-end near-duplicate detection + clustering pipeline (the north
  * rule): extract → shingle → TF-IDF → SimHash64 + MinHash128 → LSH band
  * join (salt-capped) → exact verify (Jaccard/Hamming) → connected
- * components [+ suffix-array substring pass] → (url, cluster).
+ * components, with a suffix-array substring pass → (url, cluster).
  *
  * Scale shape (10^12 docs): the corpus-sized shuffles are
  *  (1) the balancing repartition of raw (url, text) pages feeding
@@ -96,11 +100,11 @@ case class DedupConfig(
  *  (3) the corpus-stats df aggregation (one explode pass, map-side
  *      partial agg; yields idf + doc count + hot-shingle list together),
  *  (4) the band-bucket exchange (the distributed LSH hash table),
- *  (5) the winnow-anchor exchange of the substring pass (if enabled)
- *      plus its key-bounded hot-anchor df aggregation,
- *  and, past [[DedupConfig.broadcastIdLimit]], the two guarded id-set
- *  joins (dup-id anti-join, member semi-join) fall back from broadcast
- *  to one corpus-sized doc_id shuffle each.
+ *  (5) the winnow-anchor exchange of the substring pass plus its
+ *      key-bounded hot-anchor df aggregation,
+ *  and, past [[DedupConfig.broadcastIdLimit]], the three guarded id-set
+ *  joins (dup-id anti-join, verify and substring member semi-joins)
+ *  fall back from broadcast to one corpus-sized doc_id shuffle each.
  * All are linear in corpus size with map-side combine where applicable.
  * Everything else is per-row codegen'd expression work; the verify
  * join and CC loop run on candidate pairs, which LSH keeps ≪ n².
@@ -116,8 +120,7 @@ object DedupPipeline {
     * as opaque caller-owned values, `/root/reference/index.go:48`);
     * identity integrity is then enforced by [[resolveIdCollisions]]. */
   def extract(pages: DataFrame, cfg: DedupConfig): DataFrame = {
-    val tokens = TextKernel.dropStopWords(
-      TextKernel.tokenize(coalesce(col("text"), lit(""))), cfg.stopWords)
+    val tokens = TextKernel.tokenize(coalesce(col("text"), lit("")))
     // a null url must derive a NULL id, not xxhash64(null): Spark's
     // hash expressions skip null children and return the seed, so every
     // null-url row would silently share ONE doc_id — and the identity
@@ -170,10 +173,9 @@ object DedupPipeline {
     * carries the audit AND every downstream broadcast decision
     * (optimization round: ~3 serial job barriers removed per run; the
     * fixture-scale pipeline wall is job-floor-bound, see
-    * OPTIMIZATION_r06.md). None when the audit is disabled
-    * (idAuditRounds = 0) — callers then fall back to measuring. */
+    * OPTIMIZATION_r06.md). */
   private[graft] def resolveIdCollisionsCounted(
-      extracted: DataFrame, cfg: DedupConfig): (DataFrame, Option[Long]) = {
+      extracted: DataFrame, cfg: DedupConfig): (DataFrame, Some[Long]) = {
     // null caller-supplied ids are normalised up front (narrow
     // projection): the audit's equi-join can never match a null key, so
     // a null collision group would survive every rehash round and die
@@ -183,13 +185,8 @@ object DedupPipeline {
     // (extract derives null, and xxhash64(null) here would fold every
     // such row to the hash seed — one shared identity): the audit
     // below flags the null group and fails with the precise message.
-    var cur = extracted.withColumn("doc_id",
-      coalesce(col("doc_id"),
-        when(col("url").isNull, lit(null).cast("long"))
-          .otherwise(xxhash64(col("url")))))
-    if (cfg.idAuditRounds <= 0) return (cur, None)
-    var round = 0
-    while (round <= cfg.idAuditRounds) {
+    @scala.annotation.tailrec
+    def audit(cur: DataFrame, round: Int): (DataFrame, Some[Long]) = {
       // distinctness proxy: a second hash under a seed DISJOINT from the
       // rehash round range [1, idAuditRounds]. With seed 1 (= round 1's
       // rehash salt) a round-1-remapped doc's doc_id EQUALS its
@@ -215,29 +212,31 @@ object DedupPipeline {
       val nIds = st.getLong(0)
       val nBad = st.getLong(1)
       val nNull = st.getLong(2)
-      if (nBad == 0 && nNull == 0) return (cur, Some(nIds))
       if (nNull > 0)
         throw new IllegalArgumentException(
           "rows with neither a doc_id nor a url have no identity — " +
             "xxhash64(null) would fold them all onto one shared doc_id " +
             "(silently fusing unrelated documents into one cluster); " +
             "supply a url or a caller-owned doc_id for every row")
+      if (nBad == 0) return (cur, Some(nIds))
       if (round == cfg.idAuditRounds)
         throw new IllegalStateException(
           s"doc_id collisions unresolved after ${cfg.idAuditRounds} " +
             s"rehash rounds ($nBad colliding ids) — refusing to cluster " +
             "with ambiguous identities")
-      round += 1
       val bad = grouped.filter(col("u") > 1).select("doc_id")
       val badIds = (if (nBad <= cfg.broadcastIdLimit) bad.hint("broadcast")
                     else bad).withColumnRenamed("doc_id", "__bad_id")
-      cur = cur.join(badIds, cur("doc_id") === col("__bad_id"), "left")
+      audit(cur.join(badIds, cur("doc_id") === col("__bad_id"), "left")
         .withColumn("doc_id",
-          when(col("__bad_id").isNotNull, xxhash64(col("url"), lit(round)))
+          when(col("__bad_id").isNotNull, xxhash64(col("url"), lit(round + 1)))
             .otherwise(col("doc_id")))
-        .drop("__bad_id")
+        .drop("__bad_id"), round + 1)
     }
-    (cur, None)
+    audit(extracted.withColumn("doc_id",
+      coalesce(col("doc_id"),
+        when(col("url").isNull, lit(null).cast("long"))
+          .otherwise(xxhash64(col("url"))))), 0)
   }
 
   /** Stage 2a — exact-dup edges: one (a, b) per duplicate copy b, where
@@ -557,16 +556,11 @@ object DedupPipeline {
     // broadcastIdLimit, so the at-scale no-unguarded-broadcast invariant
     // is unchanged — the bound is conservative: a 10^12-doc corpus
     // falls back to planner-chosen shuffle joins exactly as before).
-    val (extracted, nIdsOpt) = resolveIdCollisionsCounted(extracted00, cfg)
-    def broadcastIdSets: Boolean = nIdsOpt match {
-      case Some(n) => n <= cfg.broadcastIdLimit
-      case None    => false // audit disabled: measured below, per join
-    }
+    val (extracted, Some(nIds)) = resolveIdCollisionsCounted(extracted00, cfg)
+    val broadcastIdSets = nIds <= cfg.broadcastIdLimit
     val exactEdges = shared(store.stage("exact_edges", Seq("extract")) {
       exactDupEdges(extracted)
     })
-    // audit-disabled fallback: measure the dup count (one job over the
-    // slim persisted edge frame; parquet metadata-only on resume)
     // reps is NOT persisted on the broadcast path (optimization round):
     // it is ~the whole fat extracted frame again, and caching it
     // duplicated ~0.6 GB of cache write+read traffic at 375k docs on a
@@ -578,12 +572,10 @@ object DedupPipeline {
     // past broadcastIdLimit) the persist stays: there, recomputation
     // would repeat a corpus-sized exchange per consumer. (With a
     // parquet store the stage materialises for resume either way.)
-    val repsBc = nIdsOpt.map(_ <= cfg.broadcastIdLimit).getOrElse(
-      exactEdges.count() <= cfg.broadcastIdLimit)
     val repsStage = store.stage("reps", Seq("extract")) {
-      exactDupReps(extracted, exactEdges, repsBc)
+      exactDupReps(extracted, exactEdges, broadcastIdSets)
     }
-    val reps = if (repsBc) repsStage else shared(repsStage)
+    val reps = if (broadcastIdSets) repsStage else shared(repsStage)
     // slim to what downstream stages read: banding needs the signatures,
     // verify needs shingles — carrying text/norm/url through the CPU
     // repartition and the band exchanges would multiply shuffle volume
@@ -602,25 +594,15 @@ object DedupPipeline {
     // candidate-member ids are doc_ids, so nIds bounds them: the
     // separate pair-count job is gone; the first consumer (the member
     // broadcast build / semi-join) materialises the cands cache instead.
-    // Audit-disabled fallback: one measured count, as before.
     val verified = store.stage("verified", Seq("candidates", "signatures")) {
-      val bc = nIdsOpt.map(_ <= cfg.broadcastIdLimit).getOrElse(
-        2 * cands.count() <= cfg.broadcastIdLimit)
-      val jaccardVerified = verifyPairs(cands, sigs, cfg, bc)
-      if (cfg.enableSimhashBands)
-        jaccardVerified.select($"a", $"b")
-          .union(simhashEdges(sigs, cfg).select($"a", $"b"))
-      else jaccardVerified.select($"a", $"b")
+      verifyPairs(cands, sigs, cfg, broadcastIdSets).select($"a", $"b")
+        .union(simhashEdges(sigs, cfg).select($"a", $"b"))
     }
-    val substrEdges =
-      if (cfg.enableSubstr)
-        store.stage("substr_edges", Seq("reps")) {
-          SuffixArrayStage.substringEdges(reps, "doc_id", "norm",
-            cfg.substrMinRun, broadcastIdLimit = cfg.broadcastIdLimit,
-            broadcastMembers = if (nIdsOpt.isDefined) Some(broadcastIdSets)
-                               else None)
-        }
-      else pages.sparkSession.emptyDataset[(Long, Long)].toDF("a", "b")
+    val substrEdges = store.stage("substr_edges", Seq("reps")) {
+      SuffixArrayStage.substringEdges(reps, "doc_id", "norm",
+        cfg.substrMinRun, broadcastIdLimit = cfg.broadcastIdLimit,
+        broadcastMembers = Some(broadcastIdSets))
+    }
     val edgesAll = exactEdges.select("a", "b")
       .union(verified.select("a", "b"))
       .union(substrEdges.select("a", "b"))

@@ -123,7 +123,6 @@ object ConnectedComponents {
         val m2 = merged.select($"id".as("jid"), $"comp".as("jcomp"))
         val jumped = merged.join(m2, merged("comp") === m2("jid"), "left")
           .select(merged("id"), coalesce($"jcomp", merged("comp")).as("comp"))
-        val t0 = System.nanoTime()
         val next = jumped.localCheckpoint(eager = false)
         // the one window where TWO label snapshots are live: a failed
         // potential job (which is also next's materialisation) must
@@ -131,8 +130,6 @@ object ConnectedComponents {
         val nextPot =
           try potential(next)
           catch { case t: Throwable => freeLocalCheckpoint(next); throw t }
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(f"[cc] iter $iter ${(System.nanoTime() - t0) / 1e9}%.2f s")
         freeLocalCheckpoint(labels)
         labels = next
         converged = nextPot.compareTo(pot) == 0

@@ -350,8 +350,9 @@ object HashKernels {
   // document, yet the inline loop re-drew all 64 Box–Muller Gaussians
   // (2 mix64 + log + sqrt + cos + sin per pair) for every (doc, term)
   // incidence — ~64 transcendental calls × terms × docs, the dominant
-  // signature-stage CPU (ProfileDedup). The cache computes each term's
-  // 64-vector ONCE and reuses it across documents.
+  // signature-stage CPU (`perfbench/run.py --trace 1`, span
+  // `hash.signatures`). The cache computes each term's 64-vector ONCE
+  // and reuses it across documents.
   // BIT-EXACT: cached g(b) is the exact double the inline code produced
   // (same counters, same transcendental calls), and `acc(b) += w * g(b)`
   // multiplies the same operands in the same order — signatures are

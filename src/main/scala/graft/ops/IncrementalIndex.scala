@@ -234,7 +234,6 @@ class IncrementalIndex(spark: SparkSession, path: String,
    * aggregation + count per put.
    */
   private def resolveCrossBatchIds(sigs: DataFrame): DataFrame = {
-    if (cfg.idAuditRounds <= 0) return sigs
     // one deterministic (doc_id, url-hash) row per stored id (the store
     // is unaliased — this audit's own invariant — so the max() is just
     // a dedup of same-url re-puts across batches). Empty store (first

@@ -84,6 +84,31 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     ext.unpersist(); cands.unpersist()
   }
 
+  test("run with broadcastIdLimit = 0 and no auto-broadcast clusters " +
+    "exactly like the default broadcast path") {
+    import spark.implicits._
+    // DESIGN invariant 12: past broadcastIdLimit the dup-id anti-join,
+    // the verify member semi-join and the substring-pass member
+    // semi-join drop their hint; with auto-broadcast off as well all
+    // three run as shuffle joins, and no cluster may change
+    val (pages, _) = SyntheticPages.generate(spark, 300)
+    def clusters(cfg: DedupConfig) = DedupPipeline.run(pages, cfg)
+      .select("url", "cluster").as[(String, Long)].collect().toSet
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    val shuffled =
+      try {
+        spark.conf.set(key, "-1")
+        clusters(DedupConfig(broadcastIdLimit = 0))
+      } finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+    val broadcast = clusters(DedupConfig())
+    assert(shuffled === broadcast)
+    assert(broadcast.map(_._2).size < broadcast.size, "planted dups merge")
+  }
+
   test("hot bucket: chain pairing keeps every member connected") {
     import spark.implicits._
     // one bucket with 500 members, far above maxBucket=64
